@@ -319,6 +319,12 @@ def unregister_seq_claim_store(scheme: str) -> None:
 _UNRESOLVED = object()
 
 
+def _hidden_name(name: str) -> bool:
+    """Spark's file-index rule for names a table scan never reads:
+    `.`-prefixed, or `_`-prefixed unless a `name=value` partition dir."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 @dataclass
 class HudiTable:
     """A keyed, upsertable, optionally partitioned lake table.
@@ -421,9 +427,16 @@ class HudiTable:
             # one per upsert/delete exists() probe). A root holding
             # only _SUCCESS/hidden files stays False, matching the
             # probe; an unreadable/corrupt footer is the one corner
-            # that now surfaces at read time instead of here.
-            for _dirpath, _dirs, files in os.walk(local):
-                if any(f.endswith(".parquet") for f in files):
+            # that now surfaces at read time instead of here. Hidden
+            # names are pruned by Spark's own file-index rule, so the
+            # `_temporary/**/part-*.parquet` a crashed append leaves
+            # behind does not make a table without data read as one.
+            for _dirpath, dirs, files in os.walk(local):
+                dirs[:] = [d for d in dirs if not _hidden_name(d)]
+                if any(
+                    f.endswith(".parquet") and not _hidden_name(f)
+                    for f in files
+                ):
                     return True
             return False
         try:
@@ -934,7 +947,7 @@ class HudiTable:
         spark = df.sparkSession
         df = self._with_partition_col(df, spark)
         if self.is_mor and self.exists(spark):
-            self._append_log(df, "upsert", spark)
+            self._append_log(df.withColumn("__hudi_op", F.lit("upsert")), spark)
             self._maybe_compact(spark)
         elif self._is_manifest:
             files, ranges, pranges = self._manifest_write_batch(df)
@@ -1528,10 +1541,12 @@ class HudiTable:
         self._write_seqmax(seq)
         return seq
 
-    def _append_log(self, df: DataFrame, op: str, spark: SparkSession) -> None:
-        """MERGE_ON_READ write path: append the batch to the delta log —
-        no base files are opened, the write cost is O(batch), and the
-        merge is deferred to read()/compact()."""
+    def _append_log(self, df: DataFrame, spark: SparkSession) -> int:
+        """MERGE_ON_READ write path: append the batch — which carries
+        each row's ``__hudi_op`` (``upsert`` | ``delete``) — to the delta
+        log as ONE entry at one freshly allocated seq (returned). No base
+        files are opened, the write cost is O(batch), and the merge is
+        deferred to read()/compact()."""
         seq = self._alloc_seq(spark)
         # materialize, don't guard: on a partitioned table a log entry
         # missing the partition column (typically a key-only delete
@@ -1543,17 +1558,19 @@ class HudiTable:
         # one consistent layout; the merge joins on record_key, so a
         # marker's partition value is irrelevant to its semantics.
         df = self._with_partition_col(df, spark)
-        entry = df.withColumn("__hudi_op", F.lit(op)).withColumn(
-            "__hudi_seq", F.lit(seq).cast("long")
-        )
+        entry = df.withColumn("__hudi_seq", F.lit(seq).cast("long"))
         self._writer(entry, "append").parquet(self._log_path)
+        return seq
 
     def _maybe_compact(self, spark: SparkSession) -> None:
         """Inline compaction trigger (Hudi's ``hoodie.compact.inline`` +
         ``hoodie.compact.inline.max.delta.commits``, default 5): after a
         log append, fold the log into the base once it has accumulated N
         delta commits. Off unless ``hoodie.compact.inline=true`` —
-        matching Hudi's default of deferring compaction."""
+        matching Hudi's default of deferring compaction. A CDC
+        micro-batch is ONE delta commit (``apply_changes``), so N counts
+        micro-batches, as in Hudi; it used to count a mixed batch twice
+        (upserts and deletes took a seq each)."""
         if str(self.options.get("hoodie.compact.inline", "false")).lower() != "true":
             return
         max_commits = int(
@@ -2018,7 +2035,7 @@ class HudiTable:
         # and the streaming demux upserts many tables per micro-batch
         table_exists = self.exists(spark)
         if self.is_mor and table_exists:
-            self._append_log(df, "upsert", spark)
+            self._append_log(df.withColumn("__hudi_op", F.lit("upsert")), spark)
             self._maybe_compact(spark)
             self._maybe_sync_catalog(spark)
             return
@@ -2096,6 +2113,57 @@ class HudiTable:
         self._maybe_sync_catalog(spark)
 
     @_locked
+    def apply_changes(
+        self,
+        df: DataFrame,
+        is_delete_col: str,
+        spark: SparkSession,
+        n_upserts: int,
+        n_deletes: int,
+    ) -> int | None:
+        """Apply one compacted change set — at most one row per record
+        key, the boolean ``is_delete_col`` marking delete rows — as ONE
+        commit where the table type allows it.
+
+        On an existing MERGE_ON_READ table the whole set is a single
+        delta-log entry at one seq (returned): Hudi's one deltacommit per
+        micro-batch, with deletes carried as records of the same commit.
+        Delete rows keep the fields a ``delete()`` marker carries (record
+        key, precombine, partition column) and NULL everything else, so
+        the read merge sees exactly the markers ``delete()`` would have
+        written, and the log gains no column. Because the set is
+        key-unique, sharing one seq changes no merge outcome, and
+        ``read(as_of_seq=...)`` sees all of the change or none of it.
+
+        Genesis (no table yet) and COPY_ON_WRITE go through ``upsert()``
+        then ``delete()``, each called only when its side is non-empty
+        (``n_upserts`` / ``n_deletes``, counted by the caller); returns
+        None."""
+        is_del = F.col(is_delete_col)
+        if self.is_mor and self.exists(spark):
+            marker = {self.record_key, self.precombine, self.partition_field}
+            cols = [
+                F.col(c) if c in marker else F.when(~is_del, F.col(c)).alias(c)
+                for c in df.columns
+                if c != is_delete_col
+            ]
+            op = F.when(is_del, "delete").otherwise("upsert")
+            seq = self._append_log(
+                df.select(*cols, op.alias("__hudi_op")), spark
+            )
+            self._maybe_compact(spark)
+            self._maybe_sync_catalog(spark)
+            return seq
+        if n_upserts:
+            self.upsert(df.filter(~is_del).drop(is_delete_col), spark)
+        if n_deletes:
+            marker = [self.record_key, self.precombine]
+            if self.partition_field and self.partition_field in df.columns:
+                marker.append(self.partition_field)
+            self.delete(df.filter(is_del).select(*marker), spark)
+        return None
+
+    @_locked
     def delete(self, keys_df: DataFrame, spark: SparkSession | None = None) -> None:
         """Remove rows whose record key appears in ``keys_df``.
 
@@ -2118,7 +2186,12 @@ class HudiTable:
                 and self.partition_field in keys_df.columns
             ):
                 cols.append(self.partition_field)
-            self._append_log(keys_df.select(*cols).distinct(), "delete", spark)
+            self._append_log(
+                keys_df.select(*cols)
+                .distinct()
+                .withColumn("__hudi_op", F.lit("delete")),
+                spark,
+            )
             self._maybe_compact(spark)
             self._maybe_sync_catalog(spark)
             return

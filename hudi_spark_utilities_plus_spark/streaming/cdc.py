@@ -12,15 +12,17 @@ the same envelope (FIXTURES.md F5):
 
 ``read_cdc_stream`` yields the unbounded DataFrame; ``apply_cdc_batch``
 applies one micro-batch to a keyed table: within-batch latest-wins
-compaction first (a batch may hold several ops per key), then upsert the
-non-deletes and delete the delete-keys — idempotent, so checkpoint replay
-after failure converges to the same state (at-least-once delivery +
-idempotent apply ⇒ exactly-once table state).
+compaction first (a batch may hold several ops per key), then one table
+change carrying the upserts and the delete markers (one delta commit on a
+MERGE_ON_READ table) — idempotent, so checkpoint replay after failure
+converges to the same state (at-least-once delivery + idempotent apply ⇒
+exactly-once table state).
 """
 
 from __future__ import annotations
 
 import logging
+import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -187,6 +189,22 @@ def read_binlog_stream(
     return reader.load()
 
 
+def _latest_wins_order(
+    columns: list[str], precombine: str, binlog_name_prefix: str
+) -> list:
+    """The within-batch latest-wins ordering, newest first: precombine,
+    then binlog position where the envelope carries it (see
+    compact_batch for why each tie-break is there)."""
+    order = [F.col(precombine).desc()]
+    if "binlog_file" in columns:
+        order.append(
+            _parsed_binlog_index(binlog_name_prefix).desc_nulls_last()
+        )
+    if "binlog_offset" in columns:
+        order.append(F.col("binlog_offset").desc_nulls_last())
+    return order
+
+
 def compact_batch(
     batch_df: DataFrame,
     record_key: str,
@@ -207,15 +225,9 @@ def compact_batch(
     would let a foreign file's index outrank this series' tombstone —
     a cross-series comparison with no meaning. Foreign/unparseable
     names rank like positionless events (nulls last)."""
-    order = [F.col(precombine).desc()]
-    cols = set(batch_df.columns)
-    if "binlog_file" in cols:
-        order.append(
-            _parsed_binlog_index(binlog_name_prefix).desc_nulls_last()
-        )
-    if "binlog_offset" in cols:
-        order.append(F.col("binlog_offset").desc_nulls_last())
-    w = Window.partitionBy(record_key).orderBy(*order)
+    w = Window.partitionBy(record_key).orderBy(
+        *_latest_wins_order(batch_df.columns, precombine, binlog_name_prefix)
+    )
     return (
         batch_df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -236,14 +248,19 @@ def apply_cdc_batch(
     by timestamp with the newer upsert already in the table — a
     key-only delete is unconditional and would kill the newer row.
 
-    Cost note (100 TB): a mixed-op micro-batch issues two table writes
-    (upsert, then delete). On MERGE_ON_READ both are O(batch) delta-log
-    appends — which is why streaming CDC targets should be MOR-typed
-    (``hoodie.table.type=MERGE_ON_READ`` in the demux props), Hudi's
-    own guidance for write-heavy streams. On COPY_ON_WRITE each pass
-    re-reads and rewrites the touched partitions, so a mixed batch pays
-    that twice; COW remains correct (and fine for low-rate streams or
-    bounded backfills) but is not the scale path here.
+    Cost note: the apply is two Spark actions — one grouped aggregate
+    over the ranked, persisted slice (route counts + malformed-event
+    audit) and one table write, ``HudiTable.apply_changes``. On an
+    existing MERGE_ON_READ table that write is ONE delta commit: the
+    compacted upserts and delete markers land in a single O(batch) log
+    entry at one seq, as Hudi writes one deltacommit per micro-batch —
+    which is why streaming CDC targets should be MOR-typed
+    (``hoodie.table.type=MERGE_ON_READ`` in the demux props). The batch
+    is atomic under time travel: ``read(as_of_seq=...)`` sees all of it
+    or none of it. On COPY_ON_WRITE (and on the genesis write) the
+    upserts and deletes are two table writes, each re-reading and
+    rewriting the touched partitions; COW remains correct (and fine for
+    low-rate streams or bounded backfills) but is not the scale path.
 
     Malformed events are skipped BEFORE compaction — and LOGGED with a
     per-op breakdown, so the drop is observable (the demux route's
@@ -256,80 +273,96 @@ def apply_cdc_batch(
     as an UPSERT, and an unknown op like ``truncate`` must not be
     applied as one either; previously any non-'delete' string upserted).
 
+    Every apply logs one INFO line with the table, the committed seq,
+    the upsert/delete winners, the skipped events and the wall.
+
     ``binlog_name_prefix`` scopes compact_batch's position tie-break to
     the stream's actual binlog series (see _parsed_binlog_index) — it
     must match the prefix the read path was attached with, or same-ts
     ties degrade to positionless ordering."""
+    t0 = time.perf_counter()
     # regexp, not F.trim: Spark's trim strips only SPACE characters,
     # while the sloppy-producer case is a trailing newline/tab
     op_n = F.regexp_replace(F.lower(F.col("op")), r"^\s+|\s+$", "")
-    keep = op_n.isin("insert", "update", "delete") & F.col(
-        table.record_key
-    ).isNotNull()
-    # The skip must be OBSERVABLE: an upstream emitting 'truncate' or
-    # corrupt keys would otherwise lose events with no trace — but the
-    # audit must not re-read the batch SOURCE every trigger (the r10
-    # shape ran an unconditional filter+groupBy straight against it).
-    # The batch is tagged with the keep flag and persisted, so the
-    # source is scanned ONCE; the audit breakdown and the compaction
-    # both run over the cache. ``coalesce(keep, false)`` — not ``keep``
-    # alone — so NULL-op rows land in the complement instead of
-    # vanishing from both sides of the tag.
-    # persists happen INSIDE the try: compact_batch raises on a batch
-    # missing the precombine column, and a persist taken before the try
-    # would leak its cached blocks on every such failed micro-batch of
-    # a long-lived driver that retries triggers
-    tagged = compacted = None
+    is_del = op_n == "delete"
+    # ``coalesce(keep, false)``, not ``keep`` alone, so NULL-op rows
+    # land in the skipped complement instead of vanishing from both
+    # sides of the tag
+    keep = F.coalesce(
+        op_n.isin("insert", "update", "delete")
+        & F.col(table.record_key).isNotNull(),
+        F.lit(False),
+    )
+    # One ranked pass: kept rows sort AHEAD of malformed ones in each
+    # key's window, so a malformed event never outranks a valid one, and
+    # kept rows rank exactly as compact_batch ranks them. Only the
+    # per-key winners and the skipped rows are kept, and persisted ONCE
+    # (inside the try, so no failure path leaks the cache on a
+    # long-lived driver that retries triggers). The cache stays
+    # hash-partitioned by the record key, so the genesis/COW upsert's
+    # key merge over it needs no second shuffle.
+    w = Window.partitionBy(table.record_key).orderBy(
+        F.col("__cdc_keep").desc(),
+        *_latest_wins_order(
+            batch_df.columns, table.precombine, binlog_name_prefix
+        ),
+    )
+    ranked = None
     try:
-        tagged = batch_df.withColumn(
-            "__cdc_keep", F.coalesce(keep, F.lit(False))
-        ).persist()
-        compacted = compact_batch(
-            tagged.filter(F.col("__cdc_keep")).drop("__cdc_keep"),
-            table.record_key,
-            table.precombine,
-            binlog_name_prefix=binlog_name_prefix,
-        ).persist()
-        upserts = compacted.filter(op_n != "delete").drop("op", "db", "table")
-        # the precombine column is unconditionally present here:
-        # compact_batch's window ordered by it, so a batch lacking it
-        # raised before this line
-        deletes = compacted.filter(op_n == "delete").select(
-            table.record_key, table.precombine
+        ranked = (
+            batch_df.withColumn("__cdc_keep", keep)
+            .withColumn("__cdc_rn", F.row_number().over(w))
+            .filter(~F.col("__cdc_keep") | (F.col("__cdc_rn") == 1))
+            .persist()
         )
-        # first action: a FULL aggregate (not isEmpty — its limit-1
-        # short-circuit would only part-fill the cache), materializing
-        # both caches and yielding the per-route counts the write gates
-        # below need. The write gates use COMPACTED counts, not the raw
-        # batch's: a key whose delete lost to a newer upsert leaves the
-        # delete route empty, and gating on the raw count would commit
-        # an empty (seq-allocating) delete entry to the MOR log.
-        routes = {
-            bool(r["is_del"]): r["n"]
-            for r in compacted.groupBy((op_n == "delete").alias("is_del"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        dropped = (
-            tagged.filter(~F.col("__cdc_keep"))
-            .groupBy(F.coalesce(op_n, F.lit("<null op>")).alias("op"))
+        # first action: a FULL aggregate (it fills the whole cache)
+        # yielding the compacted route counts — the write gates, since
+        # a key whose delete lost to a newer upsert leaves the delete
+        # route empty — and the per-op skipped counts for the audit
+        route = F.when(
+            F.col("__cdc_keep"),
+            F.when(is_del, "delete").otherwise("upsert"),
+        ).otherwise(F.coalesce(op_n, F.lit("<null op>")))
+        counts = (
+            ranked.groupBy(F.col("__cdc_keep").alias("keep"), route.alias("op"))
             .count()
             .collect()
         )
-        if dropped:
+        routes = {r["op"]: r["count"] for r in counts if r["keep"]}
+        dropped = {r["op"]: r["count"] for r in counts if not r["keep"]}
+        n_up, n_del = routes.get("upsert", 0), routes.get("delete", 0)
+        skipped = sum(dropped.values())
+        if skipped:
             _LOG.warning(
                 "apply_cdc_batch(%s): skipped %d malformed event(s) "
                 "(NULL %s key, NULL op, or op outside insert|update|delete): %s",
                 table.table_name,
-                sum(r["count"] for r in dropped),
+                skipped,
                 table.record_key,
-                {r["op"]: r["count"] for r in dropped},
+                dropped,
             )
-        if routes.get(False, 0):
-            table.upsert(upserts, spark)
-        if routes.get(True, 0):
-            table.delete(deletes, spark)
+        seq = None
+        if n_up or n_del:
+            # second action: the write, from the cache
+            seq = table.apply_changes(
+                ranked.filter(F.col("__cdc_keep"))
+                .withColumn("__cdc_delete", is_del)
+                .drop("op", "db", "table", "__cdc_keep", "__cdc_rn"),
+                "__cdc_delete",
+                spark,
+                n_upserts=n_up,
+                n_deletes=n_del,
+            )
+        _LOG.info(
+            "cdc apply table=%s seq=%s upserts=%d deletes=%d skipped=%d "
+            "duration_s=%.3f",
+            table.table_name or table.path,
+            seq,
+            n_up,
+            n_del,
+            skipped,
+            time.perf_counter() - t0,
+        )
     finally:
-        for cached in (compacted, tagged):
-            if cached is not None:
-                cached.unpersist()
+        if ranked is not None:
+            ranked.unpersist()

@@ -16,9 +16,12 @@ run the idempotent CDC apply. Offsets commit to the checkpoint after the
 batch, giving the reference's recovery contract.
 
 Scale notes: the batch is persisted once and filtered per table (K
-filters over one cached micro-batch beat K full re-reads); each table's
-upsert is an independent keyed shuffle, so hot tables don't serialize
-cold ones behind a global key shuffle.
+filters over one cached micro-batch beat K full re-reads). Each table's
+apply is two Spark actions: one ranked pass (an independent keyed
+shuffle, so hot tables don't serialize cold ones behind a global key
+shuffle) and one write — on MERGE_ON_READ a single delta commit holding
+the table's upserts and deletes, Hudi's one deltacommit per table per
+micro-batch.
 """
 
 from __future__ import annotations

@@ -334,6 +334,84 @@ def test_apply_cdc_batch_op_totality_and_null_key_skip(spark, tmp_path, caplog):
     assert "'<null op>': 1" in msg and "'truncate': 1" in msg and "'insert': 1" in msg
 
 
+def test_apply_cdc_batch_is_one_delta_commit_on_mor(spark, tmp_path, caplog):
+    """A mixed insert/update/delete micro-batch on an existing
+    MERGE_ON_READ table is ONE delta commit: the head seq advances by
+    exactly 1, the log gains one entry holding both ops, and time
+    travel to the previous head sees none of the batch (the upserts
+    never show without their deletes). The apply logs one line with
+    the committed seq and the route counts."""
+    import logging
+
+    from hudi_spark_utilities_plus_spark.lake import HudiTable
+    from hudi_spark_utilities_plus_spark.streaming.cdc import apply_cdc_batch
+
+    t = HudiTable(
+        path=str(tmp_path / "one"),
+        record_key="id",
+        precombine="ts",
+        table_type="MERGE_ON_READ",
+    )
+    t.bulk_insert(
+        spark.createDataFrame(
+            [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")],
+            "id long, ts long, data string",
+        )
+    )
+    schema = "op string, db string, `table` string, id long, data string, ts long"
+
+    def state(df):
+        return sorted((r["id"], r["ts"], r["data"]) for r in df.collect())
+
+    def log_seqs():
+        return {
+            r[0]
+            for r in spark.read.parquet(t.path + "__hudi_log")
+            .select("__hudi_seq")
+            .distinct()
+            .collect()
+        }
+
+    apply_cdc_batch(
+        t,
+        spark.createDataFrame([("update", "d", "t", 3, "c2", 2)], schema),
+        spark,
+    )
+    head, seqs, before = t.latest_commit_seq(spark), log_seqs(), state(t.read(spark))
+    with caplog.at_level(
+        logging.INFO, logger="hudi_spark_utilities_plus_spark.streaming.cdc"
+    ):
+        apply_cdc_batch(
+            t,
+            spark.createDataFrame(
+                [
+                    ("update", "d", "t", 1, "a2", 3),
+                    ("delete", "d", "t", 2, None, 3),
+                    ("insert", "d", "t", 4, "d", 3),
+                    ("insert", "d", "t", 5, "e", 3),
+                    ("delete", "d", "t", 5, None, 4),  # compacts to a delete
+                    (None, "d", "t", 6, "x", 3),  # skipped
+                ],
+                schema,
+            ),
+            spark,
+        )
+    assert t.latest_commit_seq(spark) == head + 1
+    applied = [r.getMessage() for r in caplog.records if "cdc apply" in r.getMessage()]
+    assert len(applied) == 1, applied
+    assert f"seq={head + 1} upserts=2 deletes=2 skipped=1 " in applied[0]
+    assert log_seqs() == seqs | {head + 1}
+    ops = {
+        (r["id"], r["__hudi_op"])
+        for r in spark.read.parquet(t.path + "__hudi_log")
+        .filter(F.col("__hudi_seq") == head + 1)
+        .collect()
+    }
+    assert ops == {(1, "upsert"), (4, "upsert"), (2, "delete"), (5, "delete")}
+    assert state(t.read(spark, as_of_seq=head)) == before
+    assert state(t.read(spark)) == [(1, 3, "a2"), (3, 2, "c2"), (4, 3, "d")]
+
+
 @pytest.mark.streaming
 def test_demux_many_tables_parallel_apply(spark, tmp_path):
     """≥4 tables in one micro-batch: the thread-pooled per-table applies
@@ -821,6 +899,38 @@ def test_demux_transformer_derives_partition_column(spark, tmp_path):
     assert sorted(
         (r["id"], str(r["dt"])) for r in routed.collect()
     ) == [(1, "2024-01-01"), (2, "2024-01-02")]
+
+    # the same table as MERGE_ON_READ, then a mixed-op micro-batch: one
+    # delta commit whose rows (delete markers too) carry the derived dt
+    from hudi_spark_utilities_plus_spark.streaming.demux import (
+        resolve_table_config,
+    )
+
+    props["db1.t1.hoodie.table.type"] = "MERGE_ON_READ"
+    props["option.hoodie.path"] = base + "/mor/{db}/ods_{db}_{table}"
+    demux_batch(spark, batch, props)
+    mixed = spark.createDataFrame(
+        [
+            ("update", "db1", "t1", 1, '{"x":10}', "2024-01-03T08:00:00"),
+            ("delete", "db1", "t1", 2, None, "2024-01-03T08:00:01"),
+            ("insert", "db1", "t1", 3, '{"x":3}', "2024-01-02T11:00:00"),
+        ],
+        "op string, db string, `table` string, id long, data string, ts_s string",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
+    demux_batch(spark, mixed, props)
+    mor = resolve_table_config(props, "db1", "t1")
+    assert mor.latest_commit_seq(spark) == 0
+    assert sorted(
+        (r["id"], r["data"], str(r["dt"])) for r in mor.read(spark).collect()
+    ) == [(1, '{"x":10}', "2024-01-03"), (3, '{"x":3}', "2024-01-02")]
+    log = spark.read.parquet(mor.path + "__hudi_log")
+    assert sorted(
+        (r["id"], r["__hudi_op"], str(r["dt"])) for r in log.collect()
+    ) == [
+        (1, "upsert", "2024-01-03"),
+        (2, "delete", "2024-01-03"),
+        (3, "upsert", "2024-01-02"),
+    ]
 
 
 def test_demux_transformer_dropping_required_column_fails_loudly(

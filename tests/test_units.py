@@ -4029,9 +4029,6 @@ def test_tune_runtime_respects_startup_shuffle_conf():
     derive; an untouched default still is. Subprocess: the decision
     reads the startup SparkConf, which the shared fixture already
     spent."""
-    import subprocess
-    import sys
-
     import subprocess as sp
     import sys
 
@@ -4189,3 +4186,25 @@ def test_exists_fs_probe_edges(spark, tmp_path):
     )
     tp.bulk_insert(spark.createDataFrame([(1, 10, "x")], "k long, ts long, d string"))
     assert tp.exists(spark)  # nested hive-layout files found
+
+
+def test_exists_ignores_crashed_append_temporary(spark, tmp_path):
+    """A crashed append leaves `_temporary/**/part-*.parquet` under the
+    table root. Spark's file index never reads hidden dirs, so such a
+    root holds no table: exists() must say False, and the next write
+    must take the genesis path instead of appending a delta-log entry
+    over a base that cannot be read."""
+    t = HudiTable(
+        path=str(tmp_path / "t"),
+        record_key="k",
+        precombine="ts",
+        table_type="MERGE_ON_READ",
+    )
+    df = spark.createDataFrame([(1, 10)], "k long, ts long")
+    df.write.parquet(str(tmp_path / "t" / "_temporary" / "0" / "task_0"))
+    (tmp_path / "t" / ".part-0.parquet").write_text("")
+    assert not t.exists(spark)
+    t.upsert(df, spark)
+    assert t.exists(spark)
+    assert not os.path.exists(t.path + "__hudi_log")
+    assert [(r["k"], r["ts"]) for r in t.read(spark).collect()] == [(1, 10)]
